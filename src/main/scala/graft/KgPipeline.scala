@@ -81,13 +81,17 @@ object KgPipeline {
       if (pairs.isEmpty) Iterator.empty
       else {
         val tokens = Tokenizer.tokenize(SentenceSplitter.docText(doc))
-        scorer.scoreDoc(tokens, mentions, pairs, config.maxSeqLen).map { sp =>
-          if (sp.score_pos > sp.score_neg) sp
-          else sp.copy(tokens = Nil, tokenBgns = Nil, tokenEnds = Nil)
-        }
+        scorer.scoreDoc(tokens, mentions, pairs, config.maxSeqLen).map(lean)
       }
     }
   }
+
+  /** A scored row as it leaves the per-doc pass: negatives drop their
+    * window (copied only when the scorer did not already leave it empty). */
+  private def lean(sp: ScoredPair): ScoredPair =
+    if (sp.score_pos > sp.score_neg ||
+        (sp.tokens.isEmpty && sp.tokenBgns.isEmpty && sp.tokenEnds.isEmpty)) sp
+    else sp.copy(tokens = Nil, tokenBgns = Nil, tokenEnds = Nil)
 
   /** The SINGLE fused extraction pass: one scan over the corpus emits a
     * tagged union of scored pairs (kind 0, windows only on positives),
@@ -109,20 +113,18 @@ object KgPipeline {
       if (pairs.isEmpty) mentionRows
       else {
         val tokens = Tokenizer.tokenize(SentenceSplitter.docText(doc))
-        val (fitted, unfitted) = pairs.partition(p =>
-          WindowEncoder.geometry(tokens, p, config.maxSeqLen)._6)
-        val unfittedRows = unfitted.iterator.map { p =>
-          val dist = WindowEncoder.geometry(tokens, p, config.maxSeqLen)._5
-          PassRow(1, null, p.doc_id, p.e1, p.e2, p.e1_norm, p.e2_norm,
-            p.sent_dist, dist, null, null)
+        val g = new WindowEncoder.PairSpans(tokens, mentions)
+        val fitted = Seq.newBuilder[CandidatePair]
+        val unfittedRows = Seq.newBuilder[PassRow]
+        pairs.foreach { p =>
+          g.locate(p)
+          if (g.fitted(config.maxSeqLen)) fitted += p
+          else unfittedRows += PassRow(1, null, p.doc_id, p.e1, p.e2, p.e1_norm,
+            p.e2_norm, p.sent_dist, g.dist, null, null)
         }
-        val scoredRows = scorer.scoreDoc(tokens, mentions, fitted, config.maxSeqLen)
-          .map { sp =>
-            val lean = if (sp.score_pos > sp.score_neg) sp
-            else sp.copy(tokens = Nil, tokenBgns = Nil, tokenEnds = Nil)
-            PassRow(0, lean, doc.doc_id, null, null, null, null, 0, 0, null, null)
-          }
-        mentionRows ++ unfittedRows ++ scoredRows
+        val scoredRows = scorer.scoreDoc(tokens, mentions, fitted.result(), config.maxSeqLen)
+          .map(sp => PassRow(0, lean(sp), doc.doc_id, null, null, null, null, 0, 0, null, null))
+        mentionRows ++ unfittedRows.result().iterator ++ scoredRows
       }
     }
   }
@@ -168,11 +170,11 @@ object KgPipeline {
           if (pairs.isEmpty) Nil
           else {
             val tokens = Tokenizer.tokenize(SentenceSplitter.docText(doc))
+            val g = new WindowEncoder.PairSpans(tokens, mentions)
             pairs.flatMap { p =>
-              val (_, _, _, _, dist, fitted) =
-                WindowEncoder.geometry(tokens, p, config.maxSeqLen)
-              if (fitted) None
-              else Some((p.doc_id, p.e1, p.e2, p.e1_norm, p.e2_norm, p.sent_dist, dist))
+              g.locate(p)
+              if (g.fitted(config.maxSeqLen)) None
+              else Some((p.doc_id, p.e1, p.e2, p.e1_norm, p.e2_norm, p.sent_dist, g.dist))
             }
           }
         }.toDF("doc_id", "e1", "e2", "e1_norm", "e2_norm", "sent_dist", "tokenDistance")

@@ -826,9 +826,10 @@ object GraphOps {
       // almost entirely job-scheduling floors (profiled: no stage above
       // 0.2s)
       val joined = winners.unionByName(isolated)
-      // mis is a flat union of ≤rounds checkpointed `joined` leaves — no
-      // re-checkpoint of the union (the betweenness `settled` argument):
-      // dropping it saves one materialization job per round
+      // mis is a union of ≤rounds `joined` subtrees, each deterministic
+      // over its round's checkpointed cur/und leaves — no re-checkpoint of
+      // the union (the betweenness `settled` argument): dropping it saves
+      // one materialization job per round
       mis = mis.unionByName(joined.withColumn("round", lit(r)))
       val losers = cur.join(winners.withColumnRenamed("node", "src"),
         Seq("src"), "left_semi").select(col("dst").as("node")).distinct()

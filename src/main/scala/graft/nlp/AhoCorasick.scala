@@ -18,10 +18,17 @@ import scala.collection.mutable
   * must be non-word), mirroring token-aligned entity spans in the corpus.
   */
 final class AhoCorasick private (
-    // flat automaton arrays — compact to serialize/broadcast
-    private val next: Array[mutable.HashMap[Char, Int]],
+    // CSR trie: state s's edges are edgeChar/edgeTarget over
+    // edgeStart(s) until edgeStart(s + 1), sorted by char — O(states)
+    // primitive arrays, no per-node map, compact to serialize/broadcast
+    private val edgeStart: Array[Int],
+    private val edgeChar: Array[Char],
+    private val edgeTarget: Array[Int],
     private val fail: Array[Int],
-    private val out: Array[List[Int]],   // pattern ids ending at this node
+    // pattern ids ending at state s: outIds over outStart(s) until
+    // outStart(s + 1) — the state's own pattern, then its fail chain's
+    private val outStart: Array[Int],
+    private val outIds: Array[Int],
     val patterns: Array[String],
     val payloads: Array[(String, String)] // (norm_id, tag) per pattern
 ) extends Serializable {
@@ -29,6 +36,21 @@ final class AhoCorasick private (
 
   private def isWordChar(c: Char): Boolean =
     Character.isLetterOrDigit(c) || c == '_'
+
+  /** Target of state `s`'s edge on `c`, or -1: binary search over the
+    * state's sorted edge range. */
+  private def step(s: Int, c: Char): Int = {
+    var lo = edgeStart(s)
+    var hi = edgeStart(s + 1) - 1
+    while (lo <= hi) {
+      val mid = (lo + hi) >>> 1
+      val m = edgeChar(mid)
+      if (m < c) lo = mid + 1
+      else if (m > c) hi = mid - 1
+      else return edgeTarget(mid)
+    }
+    -1
+  }
 
   /** All word-boundary-valid dictionary matches in `text`; offsets are
     * `base`-shifted (doc-absolute). Overlapping matches are all emitted,
@@ -41,11 +63,13 @@ final class AhoCorasick private (
     while (i < n) {
       val c = text.charAt(i)
       var s = state
-      while (s != 0 && !next(s).contains(c)) s = fail(s)
-      state = next(s).getOrElse(c, 0)
-      var o = state
+      var t = step(s, c)
+      while (t < 0 && s != 0) { s = fail(s); t = step(s, c) }
+      state = if (t < 0) 0 else t
       // out-links are pre-propagated through fail links at build time
-      out(o).foreach { pid =>
+      var k = outStart(state)
+      while (k < outStart(state + 1)) {
+        val pid = outIds(k)
         val p = patterns(pid)
         val b = i + 1 - p.length
         val leftOk = b == 0 || !isWordChar(text.charAt(b - 1))
@@ -54,6 +78,7 @@ final class AhoCorasick private (
           val (norm, tag) = payloads(pid)
           res += Match(base + b, base + i + 1, p, norm, tag)
         }
+        k += 1
       }
       i += 1
     }
@@ -75,32 +100,53 @@ object AhoCorasick {
     val patterns = entries.map(_._1).toArray
     val payloads = entries.map { case (_, (_, n, t)) => (n, t) }.toArray
 
-    val next = mutable.ArrayBuffer(mutable.HashMap.empty[Char, Int])
-    val outB = mutable.ArrayBuffer(List.empty[Int])
+    // the trie, with sorted children, before flattening
+    val children = mutable.ArrayBuffer(mutable.TreeMap.empty[Char, Int])
+    val own = mutable.ArrayBuffer(-1)
     patterns.zipWithIndex.foreach { case (p, pid) =>
       var s = 0
       p.foreach { c =>
-        s = next(s).getOrElseUpdate(c, {
-          next += mutable.HashMap.empty[Char, Int]
-          outB += Nil
-          next.length - 1
+        s = children(s).getOrElseUpdate(c, {
+          children += mutable.TreeMap.empty[Char, Int]
+          own += -1
+          children.length - 1
         })
       }
-      outB(s) = pid :: outB(s)
+      own(s) = pid
     }
-    val fail = Array.fill(next.length)(0)
+    val nStates = children.length
+    val edgeStart = new Array[Int](nStates + 1)
+    (0 until nStates).foreach(s => edgeStart(s + 1) = edgeStart(s) + children(s).size)
+    val edgeChar = new Array[Char](edgeStart(nStates))
+    val edgeTarget = new Array[Int](edgeStart(nStates))
+    (0 until nStates).foreach { s =>
+      children(s).iterator.zipWithIndex.foreach { case ((c, v), k) =>
+        edgeChar(edgeStart(s) + k) = c
+        edgeTarget(edgeStart(s) + k) = v
+      }
+    }
+
+    // fail links and propagated outputs, breadth-first so that a state's
+    // fail target (always shallower) is final before the state is visited
+    val fail = new Array[Int](nStates)
+    val out = Array.tabulate(nStates)(s => if (own(s) >= 0) List(own(s)) else Nil)
     val queue = mutable.Queue.empty[Int]
-    next(0).values.foreach(queue.enqueue(_))
+    children(0).values.foreach(queue.enqueue(_))
     while (queue.nonEmpty) {
       val u = queue.dequeue()
-      next(u).foreach { case (c, v) =>
+      children(u).foreach { case (c, v) =>
         var f = fail(u)
-        while (f != 0 && !next(f).contains(c)) f = fail(f)
-        fail(v) = if (next(f).contains(c) && next(f)(c) != v) next(f)(c) else 0
-        outB(v) = outB(v) ++ outB(fail(v)) // propagate outputs through fail links
+        while (f != 0 && !children(f).contains(c)) f = fail(f)
+        fail(v) = children(f).get(c).filter(_ != v).getOrElse(0)
+        out(v) = out(v) ++ out(fail(v))
         queue.enqueue(v)
       }
     }
-    new AhoCorasick(next.toArray, fail, outB.toArray, patterns, payloads)
+    val outStart = new Array[Int](nStates + 1)
+    (0 until nStates).foreach(s => outStart(s + 1) = outStart(s) + out(s).length)
+    val outIds = out.flatten
+
+    new AhoCorasick(edgeStart, edgeChar, edgeTarget, fail, outStart, outIds,
+      patterns, payloads)
   }
 }

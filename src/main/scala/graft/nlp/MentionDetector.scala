@@ -2,7 +2,9 @@ package graft.nlp
 
 import graft.core.{DictEntry, Doc, Mention, Sentence}
 import org.apache.spark.broadcast.Broadcast
-import org.apache.spark.sql.{Dataset, SparkSession}
+import org.apache.spark.sql.SparkSession
+
+import scala.collection.immutable.ArraySeq
 
 /** Mention detection + entity linking (SURVEY.md §7.1 `nlp` module).
   *
@@ -44,21 +46,21 @@ object MentionDetector extends Serializable {
       if (ans >= 0 && pos < sentEnds(ans)) ans else -1
     }
     val hits = doc.spans.iterator.filter(s => s.kind == "text" && s.text.nonEmpty)
-      .flatMap(s => ac.findAll(s.text, s.offset))
-      .toSeq.sortBy(m => (m.bgn, m.end, m.norm_id))
-    hits.zipWithIndex.map { case (m, i) =>
-      Mention(doc.doc_id, s"T${i + 1}", m.tag, m.bgn, m.end, m.surface,
+      .flatMap(s => ac.findAll(s.text, s.offset)).toArray
+    java.util.Arrays.sort(hits, ByPosition)
+    ArraySeq.tabulate(hits.length) { i =>
+      val m = hits(i)
+      Mention(doc.doc_id, "T" + (i + 1), m.tag, m.bgn, m.end, m.surface,
         m.norm_id, sentOf(m.bgn))
     }
   }
 
-  /** Dataset-level stage: docs → mentions, with the automaton broadcast. */
-  def detectAll(docs: Dataset[Doc], dict: Broadcast[AhoCorasick])
-               (implicit spark: SparkSession): Dataset[Mention] = {
-    import spark.implicits._
-    docs.flatMap { doc =>
-      detect(doc, dict.value, SentenceSplitter.split(doc))
-    }
+  /** (bgn, end, norm_id) — the `T{n}` numbering order. */
+  private object ByPosition extends java.util.Comparator[AhoCorasick.Match] with Serializable {
+    def compare(x: AhoCorasick.Match, y: AhoCorasick.Match): Int =
+      if (x.bgn != y.bgn) Integer.compare(x.bgn, y.bgn)
+      else if (x.end != y.end) Integer.compare(x.end, y.end)
+      else x.norm_id.compareTo(y.norm_id)
   }
 
   /** Compile + broadcast the dictionary automaton once per job. */

@@ -22,8 +22,6 @@ import graft.core.{Doc, Sentence, Span}
   */
 object SentenceSplitter extends Serializable {
 
-  private val boundaryChars = Set('.', '!', '?')
-
   /** Split one text blob into [bgn,end) local char ranges. */
   def boundaries(text: String): Seq[(Int, Int)] = {
     val out = Seq.newBuilder[(Int, Int)]
@@ -32,7 +30,8 @@ object SentenceSplitter extends Serializable {
     val n = text.length
     while (i < n) {
       val c = text.charAt(i)
-      if (boundaryChars.contains(c) && (i + 1 == n || text.charAt(i + 1).isWhitespace)) {
+      val boundary = c == '.' || c == '!' || c == '?'
+      if (boundary && (i + 1 == n || text.charAt(i + 1).isWhitespace)) {
         out += ((start, i + 1))
         i += 1
         while (i < n && text.charAt(i).isWhitespace) i += 1

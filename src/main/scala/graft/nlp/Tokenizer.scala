@@ -1,5 +1,8 @@
 package graft.nlp
 
+import scala.collection.immutable.ArraySeq
+import scala.collection.mutable
+
 /** Deterministic regex-style word+punct tokenizer (SURVEY.md C7).
   *
   * The reference tokenizes once per document with a HF subword tokenizer and
@@ -19,9 +22,11 @@ object Tokenizer extends Serializable {
   private def isWordChar(c: Char): Boolean =
     Character.isLetterOrDigit(c) || c == '_'
 
-  /** Tokenize text whose index space starts at `base` (doc-absolute). */
+  /** Tokenize text whose index space starts at `base` (doc-absolute).
+    * The result is array-backed: the pair geometry indexes it O(1). */
   def tokenize(text: String, base: Int = 0): IndexedSeq[Token] = {
-    val out = IndexedSeq.newBuilder[Token]
+    val out = new mutable.ArrayBuilder.ofRef[Token]
+    out.sizeHint(text.length / 4 + 8)
     var i = 0
     val n = text.length
     while (i < n) {
@@ -36,7 +41,7 @@ object Tokenizer extends Serializable {
         i += 1
       }
     }
-    out.result()
+    ArraySeq.unsafeWrapArray(out.result())
   }
 
   /** Index of the token containing char offset `pos` (start-inclusive),

@@ -5,6 +5,8 @@ import graft.nlp.{MentionDetector, SentenceSplitter, AhoCorasick}
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.{Dataset, SparkSession}
 
+import scala.collection.immutable.ArraySeq
+
 /** Candidate-pair generation (SURVEY.md §2.3 J3/J4, §2.2 F1-F4).
   *
   * Reference semantics (helpers/example_generation_cross_sentence_MD.py):
@@ -25,21 +27,50 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 object PairGenerator extends Serializable {
 
   /** Unordered candidate pairs of one document. `mentions` must carry
-    * sent_ids (from MentionDetector). Pure — usable in flatMap. */
+    * sent_ids (from MentionDetector). Pure — usable in flatMap. The F3
+    * tag-pair table and the F4 cutoff are resolved once per call, so the
+    * pair loop only indexes arrays. */
   def forDoc(mentions: Seq[Mention], config: TaskConfig): Seq[CandidatePair] = {
     val valid = mentions
       .filter(m => config.entities.contains(m.tag) && m.sent_id >= 0) // F1
-      .sortBy(m => (m.bgn, m.end, m.mention_id))
-    for {
-      i <- valid.indices
-      j <- (i + 1) until valid.length
-      a = valid(i); b = valid(j)
-      if config.isValidPair(a.tag, b.tag) // F3
-      dist = math.abs(a.sent_id - b.sent_id)
-      if config.passesDistancePrune(dist) // F4 (negatives/prediction mode)
-    } yield CandidatePair(a.doc_id, a.mention_id, b.mention_id,
-      a.norm_id, b.norm_id, a.bgn, a.end, b.bgn, b.end,
-      a.sent_id, b.sent_id, dist, cross_sentence = dist > 0)
+      .toArray
+    java.util.Arrays.sort(valid, ByPosition)
+    val n = valid.length
+    if (n < 2) return Nil
+    // F3 over the doc's distinct tags: validTag(ti * nTags + tj)
+    val tags = valid.iterator.map(_.tag).distinct.toArray
+    val nTags = tags.length
+    val tagIdx = valid.map(m => tags.indexOf(m.tag))
+    val validTag = Array.tabulate(nTags * nTags)(k =>
+      config.isValidPair(tags(k / nTags), tags(k % nTags)))
+    val prune = config.negativeSentenceDistanceCutoff.isDefined // F4
+    val cutoff = config.negativeSentenceDistanceCutoff.getOrElse(0)
+    val out = ArraySeq.newBuilder[CandidatePair]
+    var i = 0
+    while (i < n) {
+      val a = valid(i)
+      val row = tagIdx(i) * nTags
+      var j = i + 1
+      while (j < n) {
+        val b = valid(j)
+        val dist = math.abs(a.sent_id - b.sent_id)
+        if (validTag(row + tagIdx(j)) && (!prune || dist < cutoff))
+          out += CandidatePair(a.doc_id, a.mention_id, b.mention_id,
+            a.norm_id, b.norm_id, a.bgn, a.end, b.bgn, b.end,
+            a.sent_id, b.sent_id, dist, cross_sentence = dist > 0)
+        j += 1
+      }
+      i += 1
+    }
+    out.result()
+  }
+
+  /** (bgn, end, mention_id) — the J3 first-occurrence order. */
+  private object ByPosition extends java.util.Comparator[Mention] with Serializable {
+    def compare(x: Mention, y: Mention): Int =
+      if (x.bgn != y.bgn) Integer.compare(x.bgn, y.bgn)
+      else if (x.end != y.end) Integer.compare(x.end, y.end)
+      else x.mention_id.compareTo(y.mention_id)
   }
 
   /** J2 — per-document equiv transitive expansion (reference:

@@ -23,8 +23,8 @@ trait RelationScorer extends Serializable {
     * materializing encoded windows for rows it will score negative (the
     * window is only consumed downstream by trigger detection, which is
     * positives-gated). Default = encode-everything then `score` —
-    * semantically the reference decode path; override for zero-allocation
-    * scoring (equivalence is asserted in ScorerParitySpec). */
+    * semantically the reference decode path; override to skip the windows
+    * of negatives (equivalence is asserted in ScorerParitySpec). */
   def scoreDoc(tokens: IndexedSeq[Token], mentions: Seq[Mention],
                pairs: Seq[CandidatePair], maxSeqLen: Int): Iterator[ScoredPair] =
     score(WindowEncoder.encodeDoc(tokens, pairs, mentions, maxSeqLen)
@@ -63,36 +63,59 @@ class LexiconScorer(lexicon: Set[String]) extends RelationScorer {
         p.tokens, p.tokenBgns, p.tokenEnds, neg, pos)
     }
 
-  /** Zero-allocation fast path: count lexicon tokens strictly between the
-    * two focus mentions directly on the doc token array (the between-masks
-    * region of the window is exactly tokens (t1e, t2) — it always fits
-    * inside the W3 slice because the pair fits max_seq_len). Tokens owned
-    * by OTHER mentions are excluded, mirroring their [unused2] masking in
-    * the window path. Windows are built only for positives. */
+  /** Per-doc fast path: the rule reads only the between-masks region of
+    * the window, which is exactly tokens (t1e, t2) — it always fits inside
+    * the W3 slice because the pair fits max_seq_len. Tokens owned by OTHER
+    * mentions are excluded, mirroring their [unused2] masking in the window
+    * path. Per doc: one ownership pass, one prefix count of unowned lexicon
+    * tokens and one token span per mention; per pair: two span lookups and
+    * one subtraction. Windows are built only for positives; negatives carry
+    * empty ones, and unfitted pairs emit no row. */
   override def scoreDoc(tokens: IndexedSeq[Token], mentions: Seq[Mention],
                         pairs: Seq[CandidatePair], maxSeqLen: Int): Iterator[ScoredPair] = {
     if (pairs.isEmpty) return Iterator.empty
-    lazy val owner = WindowEncoder.owners(tokens, mentions)
-    pairs.iterator.flatMap { p =>
-      val (_, t1e, t2, _, _, fitted) = WindowEncoder.geometry(tokens, p, maxSeqLen)
-      if (!fitted) None
-      else {
-        var hits = 0
-        if (p.sent_dist == 0) {
-          var i = t1e + 1
-          while (i < t2) {
-            if (lexicon.contains(tokens(i).text) && owner(i) == null) hits += 1
-            i += 1
-          }
+    val owner = WindowEncoder.owners(tokens, mentions)
+    // lexBefore(k) = unowned lexicon tokens among tokens(0 until k)
+    val lexBefore = new Array[Int](tokens.length + 1)
+    var k = 0
+    while (k < tokens.length) {
+      val hit = owner(k) == null && lexicon.contains(tokens(k).text)
+      lexBefore(k + 1) = lexBefore(k) + (if (hit) 1 else 0)
+      k += 1
+    }
+    val g = new WindowEncoder.PairSpans(tokens, mentions)
+
+    def row(p: CandidatePair): ScoredPair = {
+      val hits =
+        if (p.sent_dist == 0 && g.t2 > g.t1e + 1) lexBefore(g.t2) - lexBefore(g.t1e + 1)
+        else 0
+      if (hits > 0) {
+        val enc = WindowEncoder.encodeOne(tokens, owner, p, maxSeqLen)
+        ScoredPair(p.doc_id, p.e1, p.e2, p.e1_norm, p.e2_norm,
+          p.sent_dist, enc.tokens, enc.tokenBgns, enc.tokenEnds, 0.0, 1.0 + hits)
+      } else {
+        ScoredPair(p.doc_id, p.e1, p.e2, p.e1_norm, p.e2_norm,
+          p.sent_dist, Nil, Nil, Nil, 1.0, 0.0)
+      }
+    }
+
+    new Iterator[ScoredPair] {
+      private val it = pairs.iterator
+      private var pending = advance()
+      private def advance(): ScoredPair = {
+        while (it.hasNext) {
+          val p = it.next()
+          g.locate(p)
+          if (g.fitted(maxSeqLen)) return row(p)
         }
-        if (hits > 0) {
-          val enc = WindowEncoder.encodeOne(tokens, owner, p, maxSeqLen)
-          Some(ScoredPair(p.doc_id, p.e1, p.e2, p.e1_norm, p.e2_norm,
-            p.sent_dist, enc.tokens, enc.tokenBgns, enc.tokenEnds, 0.0, 1.0 + hits))
-        } else {
-          Some(ScoredPair(p.doc_id, p.e1, p.e2, p.e1_norm, p.e2_norm,
-            p.sent_dist, Nil, Nil, Nil, 1.0, 0.0))
-        }
+        null
+      }
+      def hasNext: Boolean = pending != null
+      def next(): ScoredPair = {
+        if (pending == null) throw new NoSuchElementException("next on empty iterator")
+        val r = pending
+        pending = advance()
+        r
       }
     }
   }

@@ -4,6 +4,8 @@ import graft.core._
 import graft.nlp.Tokenizer
 import graft.nlp.Tokenizer.Token
 
+import scala.collection.immutable.ArraySeq
+
 /** Pair-window encoding (SURVEY.md §2.5 W3, §2.2 F5, §2.7 C7-C10).
   *
   * Mirrors the reference's encoder
@@ -57,25 +59,80 @@ object WindowEncoder extends Serializable {
   }
 
   /** Per-token mention ownership (mention_id or null), computed ONCE per
-    * document and shared across all of its pair encodings. */
+    * document and shared across all of its pair encodings. A token belongs
+    * to the first mention, in stable begin-offset order, whose char range
+    * contains it. One marking pass: mentions are visited by begin offset,
+    * so the first token a mention can contain only moves forward. */
   def owners(tokens: IndexedSeq[Token], allMentions: Seq[Mention]): Array[String] = {
-    val mentionRanges = allMentions.map(m => (m.bgn, m.end, m.mention_id)).sortBy(_._1)
-    tokens.map { t =>
-      mentionRanges.find(r => t.bgn >= r._1 && t.end <= r._2).map(_._3).orNull
-    }.toArray
+    val owner = new Array[String](tokens.length)
+    var first = 0 // first token whose end lies past the current mention's bgn
+    allMentions.sortBy(_.bgn).foreach { m =>
+      while (first < tokens.length && tokens(first).end <= m.bgn) first += 1
+      var i = first
+      while (i < tokens.length && tokens(i).bgn < m.end) {
+        val t = tokens(i)
+        if (owner(i) == null && t.bgn >= m.bgn && t.end <= m.end) owner(i) = m.mention_id
+        i += 1
+      }
+    }
+    owner
   }
 
-  /** Token-index geometry of one pair: (t1, t1e, t2, t2e, dist, fitted).
-    * Pure binary-search arithmetic — no allocation; lets scorers apply the
-    * F5 fit predicate and positional rules without building a window. */
+  /** Token-index geometry of one pair: (t1, t1e, t2, t2e, dist, fitted),
+    * by binary search over the token array. Per-doc passes use
+    * [[PairSpans]], which does the searches once per mention instead. */
   def geometry(tokens: IndexedSeq[Token], p: CandidatePair,
                maxSeqLen: Int): (Int, Int, Int, Int, Int, Boolean) = {
     val t1 = Tokenizer.tokenIndexAt(tokens, p.e1_bgn)
-    val t1e = math.max(t1, Tokenizer.tokenIndexAt(tokens, p.e1_end - 1))
+    val t1e = lastToken(tokens, t1, p.e1_end)
     val t2 = Tokenizer.tokenIndexAt(tokens, p.e2_bgn)
-    val t2e = math.max(t2, Tokenizer.tokenIndexAt(tokens, p.e2_end - 1))
+    val t2e = lastToken(tokens, t2, p.e2_end)
     val dist = t2e - t1 + 1
     (t1, t1e, t2, t2e, dist, dist + MaskReserve <= maxSeqLen)
+  }
+
+  /** max(first, tokenIndexAt(end - 1)) for a span whose first token is
+    * `first`; a span ending inside that token (the common one-token
+    * mention) needs no second search. */
+  private def lastToken(tokens: IndexedSeq[Token], first: Int, end: Int): Int =
+    if (first >= tokens.length || tokens(first).end >= end) first
+    else math.max(first, Tokenizer.tokenIndexAt(tokens, end - 1))
+
+  /** The same geometry as [[geometry]] for many pairs of one document:
+    * each mention's token span [first, last] is searched once, so locating
+    * a pair is two map lookups. `locate` fills the mutable fields rather
+    * than returning a tuple; a pair whose mention id is not among
+    * `mentions`, or whose offsets differ from that mention's, falls back to
+    * the offset search. One instance per doc, one thread. */
+  final class PairSpans(tokens: IndexedSeq[Token], mentions: Seq[Mention]) {
+    private val index = new java.util.HashMap[String, Integer](mentions.length * 2)
+    private val bgns = new Array[Int](mentions.length)
+    private val ends = new Array[Int](mentions.length)
+    private val firsts = new Array[Int](mentions.length)
+    private val lasts = new Array[Int](mentions.length)
+    mentions.iterator.zipWithIndex.foreach { case (m, k) =>
+      index.putIfAbsent(m.mention_id, k)
+      bgns(k) = m.bgn
+      ends(k) = m.end
+      firsts(k) = Tokenizer.tokenIndexAt(tokens, m.bgn)
+      lasts(k) = lastToken(tokens, firsts(k), m.end)
+    }
+
+    var t1, t1e, t2, t2e = 0
+    def dist: Int = t2e - t1 + 1
+    def fitted(maxSeqLen: Int): Boolean = dist + MaskReserve <= maxSeqLen
+
+    def locate(p: CandidatePair): Unit = {
+      span(p.e1, p.e1_bgn, p.e1_end); t1 = first; t1e = last
+      span(p.e2, p.e2_bgn, p.e2_end); t2 = first; t2e = last
+    }
+
+    private var first, last = 0
+    private def span(id: String, bgn: Int, end: Int): Unit = {
+      val k = index.get(id)
+      if ((k ne null) && bgns(k) == bgn && ends(k) == end) { first = firsts(k); last = lasts(k) }
+      else { first = Tokenizer.tokenIndexAt(tokens, bgn); last = lastToken(tokens, first, end) }
+    }
   }
 
   /** Encode one pair against the shared owner array (W3 slice + MASK). */
@@ -89,8 +146,11 @@ object WindowEncoder extends Serializable {
       val countAround = (maxSeqLen - (dist + MaskReserve)) / 2
       val wBgn = math.max(0, t1 - countAround)
       val wEnd = math.min(tokens.length, t2e + 1 + countAround)
-      val sliceIdx = wBgn until wEnd
-      val masked = sliceIdx.map { i =>
+      val masked = new Array[String](wEnd - wBgn)
+      val bgns = new Array[Int](wEnd - wBgn)
+      val ends = new Array[Int](wEnd - wBgn)
+      var i = wBgn
+      while (i < wEnd) {
         val t = tokens(i)
         // focus masking decided by the PAIR's char ranges, not the owner
         // array: with overlapping dictionary surfaces (AhoCorasick emits
@@ -100,13 +160,17 @@ object WindowEncoder extends Serializable {
         val isFocus =
           (t.bgn >= p.e1_bgn && t.end <= p.e1_end) ||
             (t.bgn >= p.e2_bgn && t.end <= p.e2_end)
-        if (isFocus) FocusMask
-        else if (owner(i) != null) OtherMask
-        else t.text
+        masked(i - wBgn) =
+          if (isFocus) FocusMask
+          else if (owner(i) != null) OtherMask
+          else t.text
+        bgns(i - wBgn) = t.bgn
+        ends(i - wBgn) = t.end
+        i += 1
       }
       EncodedPair(p.doc_id, p.e1, p.e2, p.e1_norm, p.e2_norm,
-        p.sent_dist, p.cross_sentence,
-        masked, sliceIdx.map(tokens(_).bgn), sliceIdx.map(tokens(_).end),
+        p.sent_dist, p.cross_sentence, ArraySeq.unsafeWrapArray(masked),
+        ArraySeq.unsafeWrapArray(bgns), ArraySeq.unsafeWrapArray(ends),
         dist, fitted = true)
     }
   }
