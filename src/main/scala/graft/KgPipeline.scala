@@ -18,18 +18,25 @@ import org.apache.spark.sql.functions._
   * the entire extract→encode→score path is ONE narrow pass per document —
   * doc text is tokenized once and every stage is a function of the in-hand
   * doc (the reference's per-doc loop, tf.py:293-434, without its process
-  * boundary). The only shuffles are:
+  * boundary). Triples leave that pass final: negatives are dropped inside
+  * it, and each positive becomes a [[Triple]] whose arguments resolve
+  * through the canonical map (the reference's per-row dict lookup,
+  * evalsorel.py:100-108), so the triples path has no join and no shuffle.
+  * The only shuffles are:
   *   1. canonicalization (iterative self-joins over the tiny entity-edge
-  *      Dataset, not the corpus);
-  *   2. the node-table aggregation;
+  *      Dataset, not the corpus), and only when the edge set is too large
+  *      for the driver-side union-find;
+  *   2. the node-table aggregation.
+  * The dictionary automaton and the canonical map each travel as one
+  * broadcast value. Nothing ever collects mention- or pair-level data to
+  * the driver.
+  *
   * Triples are intentionally NOT deduplicated here: the reference writes
   * every positive prediction row (one per sentence context —
   * tf.py:400-407), and duplicates collapse only at evaluation time, where
   * Evalsorel keys on the canonical (doc, type, args) set. A doc with the
   * same pair positive in two sentences therefore emits two triple rows,
   * and metrics' positive_triples counts rows, not distinct triples.
-  * plus a broadcast each for the dictionary automaton and the canonical
-  * map. Nothing ever collects mention- or pair-level data to the driver.
   */
 object KgPipeline {
 
@@ -74,22 +81,61 @@ object KgPipeline {
                       scorer: RelationScorer, config: TaskConfig)
                      (implicit spark: SparkSession): Dataset[ScoredPair] = {
     import spark.implicits._
-    docs.flatMap { doc =>
-      val sentences = SentenceSplitter.split(doc)
-      val mentions = MentionDetector.detect(doc, dict.value, sentences)
-      val pairs = PairGenerator.forDoc(mentions, config)
-      if (pairs.isEmpty) Iterator.empty
-      else {
-        val tokens = Tokenizer.tokenize(SentenceSplitter.docText(doc))
-        scorer.scoreDoc(tokens, mentions, pairs, config.maxSeqLen).map(lean)
-      }
+    docs.flatMap(doc => scoreDoc(doc, dict.value, scorer, config).map(lean))
+  }
+
+  /** The same pass keeping only argmax-positive pairs (F7), windows intact:
+    * negatives are dropped inside the per-doc function and never become
+    * rows. Feeds triples and triggers. */
+  def scorePositives(docs: Dataset[Doc], dict: Broadcast[AhoCorasick],
+                     scorer: RelationScorer, config: TaskConfig)
+                    (implicit spark: SparkSession): Dataset[ScoredPair] = {
+    import spark.implicits._
+    docs.flatMap(doc => scoreDoc(doc, dict.value, scorer, config).filter(isPositive))
+  }
+
+  /** One document's scored candidate pairs: the per-doc kernel of both
+    * scored passes. */
+  private def scoreDoc(doc: Doc, dict: AhoCorasick, scorer: RelationScorer,
+                       config: TaskConfig): Iterator[ScoredPair] = {
+    val sentences = SentenceSplitter.split(doc)
+    val mentions = MentionDetector.detect(doc, dict, sentences)
+    val pairs = PairGenerator.forDoc(mentions, config)
+    if (pairs.isEmpty) Iterator.empty
+    else {
+      val tokens = Tokenizer.tokenize(SentenceSplitter.docText(doc))
+      scorer.scoreDoc(tokens, mentions, pairs, config.maxSeqLen)
     }
+  }
+
+  private def isPositive(sp: ScoredPair): Boolean = sp.score_pos > sp.score_neg
+
+  /** Positive scored pairs → triples, one row each, in a typed map: no
+    * join, no shuffle. The one definition of a triple. */
+  def triplesOf(positives: Dataset[ScoredPair], canon: Broadcast[Map[String, String]])
+               (implicit spark: SparkSession): Dataset[Triple] = {
+    import spark.implicits._
+    positives.map(sp => toTriple(canon.value, sp))
+  }
+
+  /** Both arguments resolve through the canonical map and are ordered so
+    * subj ≤ obj — Spark's `least`/`greatest`: UTF-8 byte order, and a null
+    * argument yields the other one (null only when both are). */
+  private def toTriple(canon: Map[String, String], sp: ScoredPair): Triple = {
+    val a = ConnectedComponents.resolve(canon, sp.e1_norm)
+    val b = ConnectedComponents.resolve(canon, sp.e2_norm)
+    val (subj, obj) =
+      if (a == null) (b, b)
+      else if (b == null) (a, a)
+      else if (ConnectedComponents.compareUtf8(a, b) <= 0) (a, b)
+      else (b, a)
+    Triple(sp.doc_id, subj, "Complex_formation", obj, sp.e1, sp.e2, sp.score_neg, sp.score_pos)
   }
 
   /** A scored row as it leaves the per-doc pass: negatives drop their
     * window (copied only when the scorer did not already leave it empty). */
   private def lean(sp: ScoredPair): ScoredPair =
-    if (sp.score_pos > sp.score_neg ||
+    if (isPositive(sp) ||
         (sp.tokens.isEmpty && sp.tokenBgns.isEmpty && sp.tokenEnds.isEmpty)) sp
     else sp.copy(tokens = Nil, tokenBgns = Nil, tokenEnds = Nil)
 
@@ -145,24 +191,30 @@ object KgPipeline {
     val (good, quarantine) = DocValidator.split(docs)
     val dict = MentionDetector.broadcastDict(spark, dictEntries)
 
+    // canonical map from the global equivalence edges (J6); tiny vs corpus
+    val canon = spark.sparkContext.broadcast(ConnectedComponents.canonicalMap(equivEdges))
+
     // Two physical strategies behind identical semantics:
     //  - persistPass=true: ONE fused scan, cached; all output families
     //    share it (the all-outputs job shape, e.g. RunJob).
     //  - persistPass=false: each output is its own lazy narrow pass —
     //    consumers that never touch unfitted/nodes never pay for them, and
-    //    the triples path doesn't serialize mention rows it would discard
-    //    (a typed flatMap blocks filter pushdown, so a shared UNcached
-    //    pass would materialize every PassRow kind for every consumer).
-    val (scored, unfitted, mentionNorms) =
+    //    the triples path emits neither mention rows nor negatives (a
+    //    typed flatMap blocks filter pushdown, so a shared UNcached pass
+    //    would materialize every PassRow kind for every consumer).
+    // Either way triples and nodes resolve canonical ids inside their pass.
+    val (scored, positives, unfitted, mentionNodes) =
       if (persistPass) {
         val pass = extractAll(good, dict, scorer, config)
           .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        (pass.filter((r: PassRow) => r.kind == 0).map(_.scored),
+        val scored = pass.filter((r: PassRow) => r.kind == 0).map(_.scored)
+        (scored, scored.filter((sp: ScoredPair) => isPositive(sp)),
           pass.filter((r: PassRow) => r.kind == 1).toDF()
             .select($"doc_id", $"e1", $"e2", $"e1_norm", $"e2_norm",
               $"sent_dist", $"tokenDistance"),
-          pass.filter((r: PassRow) => r.kind == 2).toDF()
-            .select($"norm_id", $"surface"))
+          pass.filter((r: PassRow) => r.kind == 2)
+            .map(r => (ConnectedComponents.resolve(canon.value, r.norm_id), r.surface))
+            .toDF("node_id", "surface"))
       } else {
         val unf = good.flatMap { doc =>
           val mentions = MentionDetector.detect(doc, dict.value, SentenceSplitter.split(doc))
@@ -180,33 +232,20 @@ object KgPipeline {
         }.toDF("doc_id", "e1", "e2", "e1_norm", "e2_norm", "sent_dist", "tokenDistance")
         val norms = good.flatMap { doc =>
           MentionDetector.detect(doc, dict.value, SentenceSplitter.split(doc))
-            .map(m => (m.norm_id, m.text))
-        }.toDF("norm_id", "surface")
-        (scoreCandidates(good, dict, scorer, config), unf, norms)
+            .map(m => (ConnectedComponents.resolve(canon.value, m.norm_id), m.text))
+        }.toDF("node_id", "surface")
+        (scoreCandidates(good, dict, scorer, config),
+          scorePositives(good, dict, scorer, config), unf, norms)
       }
-
-    // canonical map from the global equivalence edges (J6); tiny vs corpus
-    val canonMap = ConnectedComponents.canonicalizeAuto(equivEdges)
 
     // F7: only argmax-positive rows materialize as triples; all scored rows
     // remain available (the reference writes every row to TSV, positives
     // additionally to .ann — tf.py:405-407)
-    val positives = scored.filter((s: ScoredPair) => s.score_pos > s.score_neg)
-    val canonical = ConnectedComponents.withCanonical(
-      ConnectedComponents.withCanonical(positives.toDF(), "e1_norm", canonMap, "subj"),
-      "e2_norm", canonMap, "obj")
-    val triples = canonical
-      .select($"doc_id",
-        least($"subj", $"obj").as("subj"),
-        lit("Complex_formation").as("pred"),
-        greatest($"subj", $"obj").as("obj"),
-        $"e1", $"e2", $"score_neg", $"score_pos")
-      .as[Triple]
-
+    val triples = triplesOf(positives, canon)
     val triggers = positives.flatMap(TriggerDetector.triggersFor _)
 
     // node table: canonical id + surfaces + mention counts (A2-style stats)
-    val nodes = ConnectedComponents.withCanonical(mentionNorms, "norm_id", canonMap, "node_id")
+    val nodes = mentionNodes
       .groupBy($"node_id")
       .agg(lit("Protein").as("tag"),
         sort_array(collect_set($"surface")).as("surfaces"),

@@ -38,6 +38,56 @@ object ConnectedComponents {
   def canonicalizeAuto(edges: Dataset[EquivEdge], driverLimit: Int = 1000000)
                       (implicit spark: SparkSession): DataFrame = {
     import spark.implicits._
+    unionFind(edges, driverLimit) match {
+      case Some(m) => m.toSeq.toDF("node_id", "canonical_id")
+      case None => canonicalize(edges)
+    }
+  }
+
+  /** The canonical map as a driver-side value, for callers that broadcast
+    * it into a narrow pass: every non-representative node → its
+    * representative. Representatives and nodes without edges are absent
+    * (each is its own canonical id). Small edge sets take the union-find;
+    * large ones collect the distributed loop's result — the map is the
+    * same either way. */
+  def canonicalMap(edges: Dataset[EquivEdge], driverLimit: Int = 1000000)
+                  (implicit spark: SparkSession): Map[String, String] =
+    unionFind(edges, driverLimit).getOrElse {
+      import spark.implicits._
+      canonicalize(edges).filter($"node_id" =!= $"canonical_id")
+        .as[(String, String)].collect().toMap
+    }
+
+  /** Canonical id of `id` under a [[canonicalMap]]: ids absent from the
+    * map are their own canonical id; a null id stays null. */
+  def resolve(canon: Map[String, String], id: String): String =
+    if (id == null) null else canon.getOrElse(id, id)
+
+  /** Spark's string order: unsigned UTF-8 bytes, which is code point order
+    * (and Python's `sorted`, the reference's representative rule). It
+    * differs from `String.compareTo`'s UTF-16 order when a supplementary
+    * character meets one in U+E000-U+FFFF. */
+  def compareUtf8(a: String, b: String): Int = {
+    val n = math.min(a.length, b.length)
+    var i = 0
+    while (i < n) {
+      val x = a.charAt(i)
+      val y = b.charAt(i)
+      if (x != y) return Integer.compare(codePointRank(x), codePointRank(y))
+      i += 1
+    }
+    Integer.compare(a.length, b.length)
+  }
+
+  /** At the first differing UTF-16 unit of two well-formed strings, this
+    * rank orders them by code point: surrogates (supplementary
+    * characters) move above U+E000-U+FFFF. */
+  private def codePointRank(c: Char): Int =
+    if (c < 0xD800) c else if (c < 0xE000) c + 0x2000 else c - 0x800
+
+  /** The driver-side union-find, or None when the edge set exceeds
+    * `driverLimit`. Its map holds non-representative nodes only. */
+  private def unionFind(edges: Dataset[EquivEdge], driverLimit: Int): Option[Map[String, String]] = {
     // ONE take(limit+1) decides the path AND fetches the driver-side data —
     // a count()-then-collect() pair costs two scheduler round-trips of pure
     // fixed overhead per pipeline run (visible in short high-core runs).
@@ -47,7 +97,8 @@ object ConnectedComponents {
     // 1M default) to the driver before discarding them. Tune driverLimit
     // down if driver memory is tighter than a broadcast of the same map.
     val taken = edges.take(driverLimit + 1)
-    if (taken.length <= driverLimit) {
+    if (taken.length > driverLimit) None
+    else {
       val parent = scala.collection.mutable.HashMap.empty[String, String]
       // iterative find + path compression: a recursive find would build a
       // stack frame per link and overflow on the long alias chains a
@@ -62,12 +113,12 @@ object ConnectedComponents {
       taken.foreach { e =>
         val (ra, rb) = (find(e.src), find(e.dst))
         if (ra != rb) { // union by min label keeps the representative rule
-          if (ra < rb) parent(rb) = ra else parent(ra) = rb
+          if (compareUtf8(ra, rb) < 0) parent(rb) = ra else parent(ra) = rb
         }
       }
-      val keys = parent.keySet.toSeq
-      keys.map(k => (k, find(k))).toDF("node_id", "canonical_id")
-    } else canonicalize(edges)
+      val keys = parent.keysIterator.toArray
+      Some(keys.iterator.map(k => k -> find(k)).toMap)
+    }
   }
 
   /** Long-limit overload (source compatibility with the original Long
@@ -119,14 +170,4 @@ object ConnectedComponents {
       labels
     } finally sym.unpersist()
   }
-
-  /** Rewrite a column of node ids to canonical ids: identity for nodes with
-    * no equivalence edges. The canonical map is tiny relative to the corpus
-    * (entity universe, not mention universe), so broadcast it. */
-  def withCanonical(df: DataFrame, idCol: String, canonMap: DataFrame,
-                    outCol: String): DataFrame =
-    df.join(broadcast(canonMap.withColumnRenamed("node_id", idCol)
-        .withColumnRenamed("canonical_id", outCol)),
-        Seq(idCol), "left")
-      .withColumn(outCol, coalesce(col(outCol), col(idCol)))
 }

@@ -78,17 +78,21 @@ object DerivationStore {
   def parseRule(rule: String): (Seq[TriplePattern], TriplePattern) = {
     def term(t: String): Term =
       if (t.startsWith("?")) V(t.substring(1)) else C(t)
+    // a separator glued to a term reads as content, so both errors a
+    // glued separator can cause name the grammar
+    val grammar = "separators '=>' and '.' must be whitespace-delimited, " +
+      "e.g. '?x p ?y => ?a q ?b'"
     def pattern(p: String): TriplePattern = {
       val toks = p.trim.split("\\s+")
       require(toks.length == 3,
-        s"a triple pattern needs exactly 3 terms, got '${p.trim}'")
+        s"a triple pattern needs exactly 3 terms, got '${p.trim}'; $grammar")
       TriplePattern(term(toks(0)), term(toks(1)), term(toks(2)))
     }
     // split only on whitespace-delimited separator tokens: "a.b" or
     // "x=>y" inside a term is content, " . " / " => " is structure
     val halves = rule.trim.split("(^|\\s)=>(\\s|$)")
     require(halves.length == 2,
-      s"a rule needs exactly one standalone '=>', got '$rule'")
+      s"a rule needs exactly one standalone '=>', got '$rule'; $grammar")
     val body = halves(0).split("(^|\\s)\\.(\\s|$)").map(pattern).toSeq
     require(body.nonEmpty, "rule body is empty")
     (body, pattern(halves(1)))

@@ -23,9 +23,10 @@ import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
   */
 object StreamingIngest {
 
-  /** Streaming triples from a documents directory. Canonicalization joins
-    * the (static, broadcast) canonical map against the stream — a
-    * stream-static join, supported in append mode. */
+  /** Streaming triples from a documents directory: the batch pipeline's
+    * positives pass and triple row function over the stream. The static
+    * canonical map is collected and broadcast once, when the stream is
+    * defined. */
   def triples(spark: SparkSession, docsDir: String,
               dict: Broadcast[AhoCorasick], scorer: RelationScorer,
               canonMap: DataFrame,
@@ -37,17 +38,10 @@ object StreamingIngest {
       .option("maxFilesPerTrigger", "64") // bound micro-batch size
       .parquet(docsDir)
       .as[Doc]
-    val scored = graft.KgPipeline.scoreCandidates(docs, dict, scorer, config)(spark)
-    val positives = scored.filter((s: ScoredPair) => s.score_pos > s.score_neg)
-    val canon = graft.canon.ConnectedComponents.withCanonical(
-      graft.canon.ConnectedComponents.withCanonical(
-        positives.toDF(), "e1_norm", canonMap, "subj"),
-      "e2_norm", canonMap, "obj")
-    canon.select($"doc_id",
-      least($"subj", $"obj").as("subj"),
-      lit("Complex_formation").as("pred"),
-      greatest($"subj", $"obj").as("obj"),
-      $"e1", $"e2", $"score_neg", $"score_pos")
+    val canon = spark.sparkContext.broadcast(
+      canonMap.select("node_id", "canonical_id").as[(String, String)].collect().toMap)
+    val positives = graft.KgPipeline.scorePositives(docs, dict, scorer, config)(spark)
+    graft.KgPipeline.triplesOf(positives, canon)(spark).toDF()
   }
 
   /** Stateful streaming dedup: emit each document the FIRST time its text

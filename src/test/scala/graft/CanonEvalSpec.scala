@@ -65,12 +65,17 @@ class CanonEvalSpec extends AnyFunSuite {
     assert(canon.filter(_._1 != "n0000000").values.forall(_ == "n0000000"))
   }
 
-  test("withCanonical: identity for unmapped ids") {
-    val canonMap = Seq(("b", "a")).toDF("node_id", "canonical_id")
-    val df = Seq(("d1", "b"), ("d2", "q")).toDF("doc_id", "ent")
-    val out = ConnectedComponents.withCanonical(df, "ent", canonMap, "canon")
+  test("canonical id lookup: identity for unmapped ids, null stays null") {
+    val canon = Map("b" -> "a")
+    assert(ConnectedComponents.resolve(canon, "b") == "a")
+    assert(ConnectedComponents.resolve(canon, "q") == "q")
+    assert(ConnectedComponents.resolve(canon, null) == null)
+    // the join-based form it replaces agrees
+    val canonMap = canon.toSeq.toDF("node_id", "canonical_id")
+    val df = Seq(("d1", "b"), ("d2", "q"), ("d3", null)).toDF("doc_id", "ent")
+    val out = TriplesReference.withCanonical(df, "ent", canonMap, "canon")
       .select("doc_id", "canon").collect().map(r => (r.getString(0), r.getString(1))).toSet
-    assert(out == Set(("d1", "a"), ("d2", "q")))
+    assert(out == Set(("d1", "a"), ("d2", "q"), ("d3", null)))
   }
 
   test("ER candidates: blocking, edit gate, hot-token cap, support counts") {

@@ -103,6 +103,14 @@ class DerivationStoreSpec extends AnyFunSuite {
     }
   }
 
+  test("parseRule: a separator glued to a term names the whitespace rule in the error") {
+    for (bad <- Seq("?x p ?y=>?a q ?b", "?x p ?m. ?m q ?y => ?x r ?y")) {
+      val err = intercept[IllegalArgumentException](DerivationStore.parseRule(bad))
+      assert(err.getMessage.contains("must be whitespace-delimited") &&
+        err.getMessage.contains("'?x p ?y => ?a q ?b'"), s"$bad: ${err.getMessage}")
+    }
+  }
+
   test("parseRule/renderRule: dotted and '=>'-bearing constants round-trip; " +
        "non-injective terms are rejected") {
     // dotted identifiers/IRIs are content, not separators: the parser

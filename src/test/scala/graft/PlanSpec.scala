@@ -50,6 +50,16 @@ class PlanSpec extends AnyFunSuite {
       s"the fused extract->score pass must not shuffle:\n$plan")
   }
 
+  test("KG triples are one narrow pass: no Join and no Exchange in the plan") {
+    val p = core.CorpusGen.Params(nDocs = 30)
+    val triples = KgPipeline.run(core.CorpusGen.docs(core.CorpusGen.generate(spark, p)),
+      core.CorpusGen.dictionary(p), core.CorpusGen.equivEdges(p).toDS(),
+      LexiconScorer.default).triples
+    val plan = triples.queryExecution.executedPlan.toString
+    assert(!plan.contains("Join") && !plan.contains("Exchange"),
+      s"triples must resolve canonical ids without a join or a shuffle:\n$plan")
+  }
+
   test("text_pii is one narrow codegen pass: no Exchange anywhere") {
     // three regex replaces + three counts must stay a pure projection —
     // a shuffle here would mean the operator stopped being per-row
